@@ -105,7 +105,8 @@ def spread(df: DataFrame) -> DataFrame:
     at the 100 TB design point inputs already carry orders of
     magnitude more partitions than cores and this is a structural
     no-op (no exchange added). The repartition shuffles the NARROW
-    pre-compute rows (cheap), never the post-explode volume."""
+    pre-compute rows (cheap), never the post-explode volume. This is
+    the only place the engine reads a partition count."""
     sess = df.sparkSession
     p = sess.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < p:
@@ -131,27 +132,6 @@ def plan_persist(spark: SparkSession, key: str, df: DataFrame,
     df = df.persist()
     gc[key] = df
     return df
-
-
-def plan_persist_at_scale(spark: SparkSession, key: str, df: DataFrame,
-                          src: DataFrame) -> DataFrame:
-    """plan_persist, gated on the SAME scale signal as ``spread``:
-    persist the shared subtree only when its source carries at least
-    the session's core count of partitions. At fixture scale (the
-    driver tables are one parquet row group, usually cached) a
-    recompute is one in-memory aggregate, and the persist round-trip
-    (unpersist previous generation + materialization barrier) costs
-    more than it saves — a same-session A/B measured it as a
-    0.3-0.5 s per-key LOSS on the sub-second stats keys
-    (OPTIMIZATION_r15.md batch 3). At the 100 TB design point the
-    source is thousands of partitions and every extra consumer of
-    the subtree is a full corpus pass, so the bounded frame
-    persists. The check runs at plan-build time; like spread, it is
-    structural, not data-dependent."""
-    p = spark.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < p:
-        return df
-    return plan_persist(spark, key, df)
 
 
 def table_count(spark: SparkSession, sf_dir: str, table: str) -> int:

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window as W, functions as F
 
-from ..io import load_tables, plan_persist, plan_persist_at_scale, spread
+from ..io import load_tables, plan_persist, spread
 from ..registry import query
 from .util import (dsum, hexpoly_col, hexpoly_sql, prod128, rnd,
                    sql_dsum, sql_rnd, sum128)
@@ -651,15 +651,10 @@ def q_chi2_independence(spark, sf):
     deterministic double arithmetic over |cells| terms, quantized
     once."""
     c = load_tables(spark, sf)["customer"]
-    # the contingency frame feeds both marginals, the total, and the
-    # cell left-join (the q_mutual_info shape) — persisted AT SCALE
-    # (|seg × nation| cells are bounded), recomputed at fixture scale
-    # where the A/B measured the persist round-trip as a net loss.
-    o = plan_persist_at_scale(
-        spark, "chi2:o",
-        c.groupBy(F.col("c_mktsegment").alias("seg"),
-                  F.col("c_nationkey").alias("nat"))
-        .agg(F.count(F.lit(1)).alias("obs")), c)
+    # recomputed per consumer, not persisted: the form the bench measured
+    o = (c.groupBy(F.col("c_mktsegment").alias("seg"),
+                   F.col("c_nationkey").alias("nat"))
+         .agg(F.count(F.lit(1)).alias("obs")))
     rt = o.groupBy("seg").agg(F.sum("obs").alias("r_tot"))
     ct = o.groupBy("nat").agg(F.sum("obs").alias("c_tot"))
     cells = (rt.crossJoin(F.broadcast(ct))
@@ -972,17 +967,10 @@ def q_mutual_info(spark, sf):
     broadcast-joined.  All counts exact BIGINTs; ln over exact
     rationals quantized once (the q_text_entropy libm precedent)."""
     e = load_tables(spark, sf)["events"]
-    # the joint-count cell frame feeds the marginals and the MI fold,
-    # and Catalyst's exchange reuse cannot collapse every
-    # column-pruned copy — persisted AT SCALE (|x·y| cells are
-    # bounded at any corpus size: event types × 24 hours), recomputed
-    # at fixture scale where the A/B measured the persist round-trip
-    # as a net loss (engine.io.plan_persist_at_scale).
-    o = plan_persist_at_scale(
-        spark, "mi:o",
-        e.groupBy(F.col("event_type").alias("x"),
-                  F.hour("ts").cast("int").alias("y"))
-        .agg(F.count(F.lit(1)).alias("nxy")), e)
+    # recomputed per consumer, not persisted: the form the bench measured
+    o = (e.groupBy(F.col("event_type").alias("x"),
+                   F.hour("ts").cast("int").alias("y"))
+         .agg(F.count(F.lit(1)).alias("nxy")))
     mx = o.groupBy("x").agg(F.sum("nxy").alias("nx"))
     my = o.groupBy("y").agg(F.sum("nxy").alias("ny"))
     # the grand total folds out of the x-marginal (Σ nx ≡ Σ nxy,
@@ -1486,10 +1474,7 @@ def q_kruskal_wallis(spark, sf):
                                   + F.col("t") + 1)).alias("r2"),
               sum128((prod128(F.col("t"), F.col("t")) - 1)
                      * F.col("c"), "decimal").alias("ties_g")))
-    # g (k rows) feeds the n fold and the s fold — persisted AT SCALE
-    # so the corpus lineage (cell aggregate + rank window join) runs
-    # once per invocation (recomputed at fixture scale; A/B).
-    g = plan_persist_at_scale(spark, "kw:g", g, e)
+    # recomputed per consumer, not persisted: the form the bench measured
     n = g.agg(F.sum("n_g").alias("n"), F.count(F.lit(1)).alias("k"),
               F.sum("ties_g").cast("double").alias("ties"))
     s = (g.crossJoin(F.broadcast(n))
@@ -1575,12 +1560,7 @@ def q_levene_test(spark, sf):
          .agg(F.count(F.lit(1)).alias("n_g"),
               F.sum("dc").alias("s_g"),
               sum128(prod128(F.col("dc"), F.col("dc"))).alias("q_g")))
-    # g (one row per group) feeds the t fold AND the s fold; at scale
-    # each extra consumer re-runs the corpus lineage (median
-    # broadcast join + moment aggregate), so the k-row frame persists
-    # — at fixture scale it recomputes (A/B: the persist round-trip
-    # costs more than one in-memory aggregate).
-    g = plan_persist_at_scale(spark, "levene:g", g, e)
+    # recomputed per consumer, not persisted: the form the bench measured
     t = g.agg(F.sum("n_g").alias("n"),
               F.sum("s_g").cast("double").alias("tt"),
               F.count(F.lit(1)).alias("k"))
@@ -1793,13 +1773,9 @@ def q_survival_km(spark, sf):
     c = sp.groupBy("t").agg(
         F.count(F.when(F.col("ev"), 1)).alias("d"),
         F.count(F.when(~F.col("ev"), 1)).alias("cns"))
-    # |distinct gap| rows, bounded by the corpus day span — persisted
-    # AT SCALE so the orders lead-window (the only corpus-sized work)
-    # runs once per invocation (recomputed at fixture scale; A/B),
-    # and the spell total is derived from c by exact algebra (every
-    # spell lands in exactly one t bucket as either d or cns, so
-    # Σ(d+cns) = |sp|) instead of a second corpus pass.
-    c = plan_persist_at_scale(spark, "km:c", c, o0)
+    # recomputed per consumer, not persisted: the form the bench measured
+    # the spell total comes from c by exact algebra (every spell lands
+    # in one t bucket as d or cns, so Σ(d+cns) = |sp|), not a second pass
     tot = c.agg(F.sum(F.col("d") + F.col("cns")).alias("n_tot"))
     wp = W.orderBy("t").rowsBetween(W.unboundedPreceding, -1)
     r = (c.crossJoin(F.broadcast(tot))

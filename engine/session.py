@@ -24,7 +24,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+# set before pyspark, which imports numpy: numpy reads it once, at import
+os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
+
+from pyspark.sql import SparkSession  # noqa: E402
 
 RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
@@ -88,8 +91,8 @@ def configure(spark: SparkSession) -> SparkSession:
 # buffers onto lock-contended arenas instead of mmap), an untested
 # behavior change for a process that was never the stall source.
 # NUMPY_MADVISE_HUGEPAGE is additionally exported to this (driver
-# python) process, which the JVM ignores. Scale-safe: allocator
-# behavior only, never what any query computes.
+# python) process at import (top of file), which the JVM ignores.
+# Scale-safe: allocator behavior only, never what any query computes.
 PY_WORKER_ENV = {
     "NUMPY_MADVISE_HUGEPAGE": "0",
     "MALLOC_MMAP_THRESHOLD_": "268435456",
@@ -105,7 +108,6 @@ def get_spark(app: str = "engine") -> SparkSession:
     default (right for local; on a real cluster AQE coalescing takes
     over).
     """
-    os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

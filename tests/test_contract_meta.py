@@ -47,20 +47,6 @@ def test_bench_headline_keys_exist():
     assert not missing, missing
 
 
-def test_rotation_cohorts_reference_real_keys():
-    # Discover cohorts by naming convention rather than a hand-kept
-    # tuple, so a future _R0NX_NEW cohort can't be silently omitted
-    # from the staleness check (the r6 _R06C_NEW omission).
-    import __spark_entry__ as entry
-
-    cohorts = [getattr(entry, name) for name in dir(entry)
-               if name.endswith(("_GREEN", "_NEW"))]
-    assert len(cohorts) >= 6, "cohort discovery broke"
-    for cohort in cohorts:
-        stale = [k for k in cohort if k not in QUERIES]
-        assert not stale, stale
-
-
 def test_scale_probe_keys_exist():
     import scale_probe
 
@@ -68,3 +54,15 @@ def test_scale_probe_keys_exist():
                 scale_probe.X100_KEYS, scale_probe.REL100_KEYS):
         missing = [k for k in lst if k not in QUERIES]
         assert not missing, missing
+
+
+def test_load_all_raises_on_a_missing_module(monkeypatch):
+    """A query module that fails to import must fail the load, not
+    silently drop its keys from the registry."""
+    from engine import registry
+
+    monkeypatch.setattr(registry, "_MODULES",
+                        registry._MODULES + ["engine.queries.no_such_module"])
+    monkeypatch.setattr(registry, "_loaded", False)
+    with pytest.raises(ModuleNotFoundError):
+        registry.load_all()

@@ -19,6 +19,13 @@ def test_triangles_no_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan or "Cartesian" not in plan
 
 
+def test_triangles_reads_persisted_edges(spark, sf_dir):
+    # edges and oriented each feed several consumers; plan_persist
+    # computes them once instead of once per consumer
+    plan = final_plan(spark, "q_graph_triangles", sf_dir)
+    assert "InMemoryRelation" in plan, plan
+
+
 def test_lateral_decorrelates_to_one_join(spark, sf_dir):
     plan = final_plan(spark, "q_join_lateral", sf_dir)
     assert "CartesianProduct" not in plan, plan

@@ -48,41 +48,19 @@ def test_stream_session_capped_staging_is_lazy(spark, monkeypatch):
     assert again == first
 
 
-def test_plan_persist_at_scale_gates_on_source_partitions(spark):
-    """Round-15 batch 3: plan_persist_at_scale persists a shared
-    subtree ONLY when its source carries at least the session's core
-    count of partitions — at fixture scale the recompute is one
-    in-memory aggregate and the persist round-trip was A/B-measured
-    as a net loss (OPTIMIZATION_r15.md). The gate is structural
-    (plan-build time), exactly like engine.io.spread's."""
-    import pytest as _pytest
+def test_plan_persist_persists_and_unpersists_previous_generation(spark):
+    """plan_persist persists the shared subtree for the current
+    invocation, and the next call for the same key unpersists the
+    previous generation, so executor storage holds at most one frame
+    per key."""
     from pyspark import StorageLevel
 
-    from engine.io import plan_persist_at_scale, session_cache
+    from engine.io import plan_persist, session_cache
 
-    p = spark.sparkContext.defaultParallelism
-    if p < 2:
-        # r15 ADVICE: on local[1] a coalesce(1) source has exactly
-        # defaultParallelism partitions, so the fixture-scale arm
-        # cannot be constructed (1 is not < 1) and the gate always
-        # persists — the test's premise needs at least 2 cores.
-        _pytest.skip("plan_persist_at_scale gate needs defaultParallelism >= 2")
-    small_src = spark.range(100).coalesce(1)
-    big_src = spark.range(1000).repartition(p)
-    df = spark.range(10)
-
-    # fixture-scale source: returned UNCHANGED, nothing persisted
-    out = plan_persist_at_scale(spark, "t15:gate", df, small_src)
-    assert out is df
-    assert out.storageLevel == StorageLevel.NONE
-
-    # at-scale source: persisted, and a second call unpersists the
-    # previous generation (the plan_persist GC contract)
-    out1 = plan_persist_at_scale(spark, "t15:gate", df, big_src)
+    out1 = plan_persist(spark, "t15:pp", spark.range(10))
     assert out1.storageLevel != StorageLevel.NONE
-    out2 = plan_persist_at_scale(spark, "t15:gate",
-                                 spark.range(11), big_src)
+    out2 = plan_persist(spark, "t15:pp", spark.range(11))
     assert out2.storageLevel != StorageLevel.NONE
     assert out1.storageLevel == StorageLevel.NONE  # GC'd generation
     gc = session_cache(spark, "_engine_plan_persist_gc")
-    gc.pop("t15:gate").unpersist()  # leave the session clean
+    gc.pop("t15:pp").unpersist()  # leave the session clean

@@ -2,8 +2,7 @@
 __spark_entry__._rotated (round-13 VERDICT item 5).
 
 The ordering contract (normative in the _rotated docstring):
-  (a) never-rowed keys first, oldest registration cohort first,
-      registry order within a cohort;
+  (a) keys without a passing driver row first, in registry order;
   (b) driver greens sorted by (latest green round, registry index) —
       oldest-green-first with a deterministic registry tie-break;
   (c) the ordering is total over the registry — no key dropped.
@@ -70,37 +69,3 @@ def test_failed_latest_row_rotates_to_front(entry_mod):
     keys = {k: None for k in ["x", "y", "z"]}
     out = entry_mod._rotated(keys, green={"x": 4, "z": 4})
     assert out[0] == "y"
-
-
-def test_cohort_demotion_order(entry_mod):
-    """Within the waiting tier, pre-cohort keys precede cohort keys and
-    older cohorts precede newer ones (synthetic members injected)."""
-    mod = entry_mod
-    keys = {"old_key": None, "r5_key": None, "r13_key": None}
-    saved5, saved13 = mod._R05_NEW, mod._R13_NEW
-    try:
-        mod._R05_NEW = set(saved5) | {"r5_key"}
-        mod._R13_NEW = set(saved13) | {"r13_key"}
-        out = mod._rotated(keys, green={"__unused__": 1})
-    finally:
-        mod._R05_NEW, mod._R13_NEW = saved5, saved13
-    assert out == ["old_key", "r5_key", "r13_key"]
-
-
-def test_r13_cohort_leads_round14_window(entry_mod):
-    """Integration against the REAL artifacts: all 41 _R13_NEW keys are
-    in the first 41 slots of the round-14 ordering (the round-13
-    verdict's top priority), followed by the stalest greens."""
-    from engine import registry
-    registry.load_all()
-    out = entry_mod._rotated(registry.QUERIES)
-    green = entry_mod._driver_green()
-    r13 = entry_mod._R13_NEW
-    never_rowed = [k for k in r13 if k not in green]
-    if not never_rowed:
-        pytest.skip("r13 cohort already has driver rows (post-round-14)")
-    head = set(out[: len(never_rowed)])
-    assert head == set(never_rowed)
-    # spare slots immediately after are the oldest greens
-    tail_rounds = [green[k] for k in out[len(never_rowed):] if k in green]
-    assert tail_rounds == sorted(tail_rounds)

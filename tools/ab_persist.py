@@ -7,14 +7,6 @@ alternating per repetition so regime drift hits both arms equally.
 Algebraic restructures are not toggleable and stay active in both
 arms; this isolates exactly the persist-vs-recompute trade.
 
-LIMITATION (r15 ADVICE): call sites routed through
-``plan_persist_at_scale`` return the frame BEFORE plan_persist is
-ever called when the fixture-scale gate trips (source partitions <
-defaultParallelism), so for those keys arm B is identical to arm A at
-fixture scale and this A/B measures nothing — run it against ungated
-``plan_persist`` sites, or at a fixture large enough to open the gate
-(e.g. the x10 corpus), where the toggle is live again.
-
 Usage: python tools/ab_persist.py q_mutual_info q_levene_test ... [-n 4]
 """
 from __future__ import annotations
@@ -38,7 +30,7 @@ def main() -> None:
 
     from bench import run_full
     import engine.io as io
-    from engine.io import load_tables
+    from engine.io import load_tables, session_cache
     from engine.registry import QUERIES, load_all
     from engine.session import get_spark
 
@@ -65,6 +57,14 @@ def main() -> None:
         io.plan_persist = fn
         for m in mods:
             m.plan_persist = fn
+        if fn is ident:
+            # a frame left persisted by arm B would serve arm A's
+            # identical subtree through Spark's cache manager, so
+            # arm A would read it instead of recomputing
+            gc = session_cache(spark, "_engine_plan_persist_gc")
+            for df in gc.values():
+                df.unpersist()
+            gc.clear()
 
     unknown = [k for k in args if k not in QUERIES]
     if unknown:

@@ -79,7 +79,7 @@ def render() -> str:
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     # bound-test pointers must be live: the file exists and defines
     # the named test (renamed/deleted tests fail CI here, the same
-    # freshness discipline as the file:line pointers below)
+    # freshness discipline as the path::function pointers below)
     for key, node in BOUND_TESTS.items():
         path, test = node.split("::", 1)
         full = os.path.join(root, path)
@@ -92,8 +92,7 @@ def render() -> str:
     rows = []
     for key in sorted(QUERIES):
         fn = QUERIES[key]
-        code = fn.__code__
-        rel = os.path.relpath(code.co_filename, root)
+        rel = os.path.relpath(fn.__code__.co_filename, root)
         if key in ORACLE:
             check = "oracle"
         else:
@@ -103,7 +102,7 @@ def render() -> str:
                     f"rows-only key {key} has no BOUND_TESTS entry — "
                     "name its quantitative bound test before registering")
             check = f"rows-only (bound: `{bound}`)"
-        rows.append(f"| `{key}` | {check} | `{rel}:{code.co_firstlineno}` |")
+        rows.append(f"| `{key}` | {check} | `{rel}::{fn.__qualname__}` |")
     n_oracle = sum(1 for k in QUERIES if k in ORACLE)
     footer = (
         f"\n**{len(QUERIES)} keys total — {n_oracle} oracle-checked, "
